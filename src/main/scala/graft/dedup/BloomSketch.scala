@@ -29,28 +29,23 @@ private[graft] object BloomSketch {
   private[graft] def hashOf(c: Column) =
     ColumnBridge.column(new XxHash64(Seq(ColumnBridge.expression(c))))
 
-  /** Per-session build monitor: the conf set/restore pair below is
-    * read-modify-write on SESSION state, so two concurrent builds on
-    * one session could clamp each other (the sketch silently saturates
-    * — perf-only, the exact join keeps correctness) or restore the
-    * other's raised value out of order, leaving the caps permanently
-    * raised. Builds on one session serialize here; the aggregation is
-    * a sub-second single job, so the monitor costs nothing. Distinct
-    * sessions never contend (the map key). Dead-session keys are swept
-    * on entry, the cache-hygiene convention. */
-  private val buildLocks = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.SparkSession, Object]()
-
   /** Aggregate `df`'s `c` into Bloom bytes sized for `expectedItems`;
     * null when `df` is empty (the aggregate's own empty-input value —
-    * callers branch to their exact no-ledger answer). */
+    * callers branch to their exact no-ledger answer).
+    *
+    * Builds on one session serialize on that session's runtime conf
+    * (one object per session): the conf set/restore pair below is
+    * read-modify-write on it, so two concurrent builds on one session
+    * could clamp each other (the sketch silently saturates — perf-only,
+    * the exact join keeps correctness) or restore the other's raised
+    * value out of order, leaving the caps permanently raised. The
+    * aggregation is a sub-second single job, so the monitor costs
+    * nothing; distinct sessions never contend. */
   private[graft] def bloomBytes(df: DataFrame, c: Column,
-      expectedItems: Long): Array[Byte] = {
-    val spark = df.sparkSession
-    buildLocks.keySet.removeIf(_.sparkContext.isStopped)
-    val lock = buildLocks.computeIfAbsent(spark, _ => new Object)
-    lock.synchronized { bloomBytesLocked(df, c, expectedItems) }
-  }
+      expectedItems: Long): Array[Byte] =
+    df.sparkSession.conf.synchronized {
+      bloomBytesLocked(df, c, expectedItems)
+    }
 
   private def bloomBytesLocked(df: DataFrame, c: Column,
       expectedItems: Long): Array[Byte] = {

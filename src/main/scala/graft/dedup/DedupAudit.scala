@@ -143,14 +143,14 @@ private[dedup] trait DedupAudit { self: DedupOps.type =>
     // memoized like the band index below: the exact-dup hash ledger
     // and the benchmark shingle row are per-dir statics every drive
     // (and the bench's second run) would otherwise recompute
-    val exLedger = graft.util.PlanMemo.memo(spark, "st25_ex_ledger",
+    val exLedger = graft.util.Memo.frame(spark, "st25_ex_ledger",
       dir)(ledgerDocs
         .select(TextCanon.normHash.as("norm_hash")).distinct()
         .withColumn("ex_flag", lit(1)))
-    val bandIndex = graft.util.PlanMemo.memo(spark, "v20c_band_index",
+    val bandIndex = graft.util.Memo.frame(spark, "v20c_band_index",
       dir)(bandedBuckets(signatures(ledgerDocs)))
       .select(col("doc_id").as("j"), col("band_idx"), col("band_hash"))
-    val ledgerSets = graft.util.PlanMemo.memo(spark, "st24_ledger_sets",
+    val ledgerSets = graft.util.Memo.frame(spark, "st24_ledger_sets",
       dir)(ledgerDocs.select(col("doc_id"), shingles.as("sh"))
         .withColumn("sz", size(col("sh"))))
       .select(col("doc_id").as("j"), col("sh").as("sh_j"),
@@ -364,7 +364,7 @@ private[dedup] trait DedupAudit { self: DedupOps.type =>
     // memoized: the v22 entry and v22c's witness baseline share one
     // execution of the stride-1 plan per process (minShared spelled
     // into the key — specs probe non-default thresholds)
-    graft.util.PlanMemo.memo(spark, s"v22_substr_$minShared", dir)(
+    graft.util.Memo.frame(spark, s"v22_substr_$minShared", dir)(
       substringDupsPlan(spark, dir, minShared))
       .orderBy(col("i"), col("j"))
 
@@ -396,7 +396,7 @@ private[dedup] trait DedupAudit { self: DedupOps.type =>
   def substringDupsWinnowed(spark: SparkSession, dir: String, b: Int = 8,
       minShared: Int = 2): DataFrame =
     // memoized: the v22b entry and v22c's dump side share one execution
-    graft.util.PlanMemo.memo(spark, s"v22b_winnow_${b}_$minShared", dir)(
+    graft.util.Memo.frame(spark, s"v22b_winnow_${b}_$minShared", dir)(
       substringDupsWinnowedPlan(spark, dir, b, minShared))
       .orderBy(col("i"), col("j"))
 

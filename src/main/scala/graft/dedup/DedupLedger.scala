@@ -352,7 +352,7 @@ private[dedup] trait DedupLedger { self: DedupOps.type =>
   def incrementalNearDup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).filter(col("text").isNotNull)
     val inc = docs.filter(col("doc_id") % 3 === 0)
-    val ledgerBands = graft.util.PlanMemo.memo(spark, "v20c_band_index",
+    val ledgerBands = graft.util.Memo.frame(spark, "v20c_band_index",
       dir)(bandedBuckets(signatures(docs.filter(col("doc_id") % 3 =!= 0))))
     val cands = bandedBuckets(signatures(inc))
       .select(col("doc_id").as("i"), col("band_idx"), col("band_hash"))
@@ -411,10 +411,10 @@ private[dedup] trait DedupLedger { self: DedupOps.type =>
       dir: String): DataFrame = {
     val ledger = Tables.documents(spark, dir)
       .filter(col("text").isNotNull && col("doc_id") % 3 =!= 0)
-    val ledgerBands = graft.util.PlanMemo.memo(spark, "v20c_band_index",
+    val ledgerBands = graft.util.Memo.frame(spark, "v20c_band_index",
       dir)(bandedBuckets(signatures(ledger)))
       .select(col("doc_id").as("j"), col("band_idx"), col("band_hash"))
-    val ledgerSets = graft.util.PlanMemo.memo(spark, "st24_ledger_sets",
+    val ledgerSets = graft.util.Memo.frame(spark, "st24_ledger_sets",
       dir)(ledger.select(col("doc_id"), shingles.as("sh"))
         .withColumn("sz", size(col("sh"))))
       .select(col("doc_id").as("j"), col("sh").as("sh_j"),

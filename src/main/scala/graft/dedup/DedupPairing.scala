@@ -61,12 +61,12 @@ private[dedup] trait DedupPairing { self: DedupOps.type =>
     * narrow (i,j) rows straight into partial aggregation. See
     * [[ngramJaccardPrefix]] for the regime where prefix filtering wins. */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
-    // memoized ([[graft.util.PlanMemo]]): FIVE consumers per process
+    // memoized ([[graft.util.Memo.frame]]): FIVE consumers per process
     // share this one exact plan (the v2a entry, v2c2's witness baseline,
     // v2e's pair graph, v2f's apply step, and DedupSpec's equality pins)
     // — computed once, stored, read four more times. ORDER BY re-applied
     // on the (tiny) read side; the pair set itself is deterministic.
-    graft.util.PlanMemo.memo(spark, "v2a_jaccard", dir)(
+    graft.util.Memo.frame(spark, "v2a_jaccard", dir)(
       ngramJaccardPlan(spark, dir))
       .orderBy(col("i"), col("j"))
 

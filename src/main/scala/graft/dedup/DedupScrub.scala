@@ -145,7 +145,7 @@ private[dedup] trait DedupScrub { self: DedupOps.type =>
     * v20b Bloom runtime filter is the membership probe (candidates
     * then pay a keyed join). */
   /** The duplicated-window ledger as a Spark BROADCAST of the flat
-    * (window-hash → first-holder) pairs — a stored artifact (PlanMemo
+    * (window-hash → first-holder) pairs — a stored artifact (Memo.frame
     * materializes the (h, keep_doc) table; a production corpus
     * maintains its dup-window ledger ingest-side and consumers read
     * it), collected once per (session, dir) and shipped to executors
@@ -160,15 +160,14 @@ private[dedup] trait DedupScrub { self: DedupOps.type =>
     * Bloom runtime filter + keyed join is the right membership probe
     * (see the st19 docstring). Shared by st19 and the st25 ingest
     * DAG. */
-  private val scrubBc = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    org.apache.spark.broadcast.Broadcast[Array[(String, Long)]]]()
-
-  /** Bloom bytes of the stored ledger for the over-the-bound join
-    * path — Option because an empty ledger aggregates to null and
-    * ConcurrentHashMap cannot hold null values. */
-  private val scrubBloomCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Option[Array[Byte]]]()
+  private[dedup] def scrubLedgerBroadcast(spark: SparkSession,
+      dir: String):
+      org.apache.spark.broadcast.Broadcast[Array[(String, Long)]] =
+    graft.util.Memo(spark, "scrub_ledger_bc", dir) {
+      spark.sparkContext.broadcast(
+        scrubLedgerStored(spark, dir).collect()
+          .map(r => (r.getString(0), r.getLong(1))))
+    }
 
   /** The %97 benchmark slice's DISTINCT shingles as a Spark broadcast,
     * for the compiled in-row containment probe
@@ -178,38 +177,26 @@ private[dedup] trait DedupScrub { self: DedupOps.type =>
     * fixture's bench slice co-grows with the corpus, so st25 measured
     * 587× at ×100. The broadcast is bounded by the same
     * benchmarks-are-small contract as v16's semi-join side; memoized
-    * per (session, dir) with the adaptiveNlist cache discipline.
-    * Shared by st17 and the st25 ingest DAG (their slices explode to
-    * the same distinct set — null-text docs contribute no shingles
-    * either way). */
-  private val benchBcCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    org.apache.spark.broadcast.Broadcast[Array[String]]]()
-
+    * per (session, dir). Shared by st17 and the st25 ingest DAG (their
+    * slices explode to the same distinct set — null-text docs
+    * contribute no shingles either way). */
   private[dedup] def benchShinglesBc(spark: SparkSession, dir: String):
-      org.apache.spark.broadcast.Broadcast[Array[String]] = {
-    benchBcCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, dir)
-    val hit = benchBcCache.get(k)
-    if (hit != null) hit
-    else {
-      val v = spark.sparkContext.broadcast(
-        graft.util.PlanMemo.memo(spark, "bench_shingles", dir)(
+      org.apache.spark.broadcast.Broadcast[Array[String]] =
+    graft.util.Memo(spark, "bench_shingles_bc", dir) {
+      spark.sparkContext.broadcast(
+        graft.util.Memo.frame(spark, "bench_shingles", dir)(
           shingleSets(spark, dir)
             .filter(pmod(col("doc_id"), lit(97)) === 0)
             .select(explode(col("sh")).as("shingle")).distinct())
           .collect().map(_.getString(0)))
-      val prior = benchBcCache.putIfAbsent(k, v)
-      if (prior != null) { v.destroy(); prior } else v
     }
-  }
 
   /** The stored (window-hash → first-holder) dup-window ledger — the
     * artifact BOTH probe shapes read (in-row broadcast below the size
     * bound, Bloom + keyed join above it). */
   private[dedup] def scrubLedgerStored(spark: SparkSession,
       dir: String): DataFrame =
-    graft.util.PlanMemo.memo(spark, "st19_ledger", dir) {
+    graft.util.Memo.frame(spark, "st19_ledger", dir) {
       scrubWindows(
         Tables.documents(spark, dir).filter(col("text").isNotNull)
           .select(col("doc_id"), split(lower(col("text")), " ").as("w")))
@@ -223,24 +210,11 @@ private[dedup] trait DedupScrub { self: DedupOps.type =>
   /** Dup-window count of the stored ledger, memoized per (session,
     * dir) — one count job decides the probe shape for every consumer
     * in the process. */
-  private val scrubCountCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Long]()
   private[dedup] def scrubLedgerCount(spark: SparkSession,
-      dir: String): Long = {
-    // stopped-session sweep + count-outside-lock (the adaptiveNlist
-    // pattern): a Spark job inside computeIfAbsent blocks unrelated
-    // keys in the same bin, and dead-session keys pin the session
-    // graph plus (for the sibling caches below) broadcast/Bloom bytes
-    scrubCountCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, dir)
-    val hit = scrubCountCache.get(k)
-    if (hit != null) hit
-    else {
-      val v: java.lang.Long = scrubLedgerStored(spark, dir).count()
-      val prior = scrubCountCache.putIfAbsent(k, v)
-      (if (prior != null) prior else v): Long
+      dir: String): Long =
+    graft.util.Memo(spark, "scrub_count", dir) {
+      scrubLedgerStored(spark, dir).count()
     }
-  }
 
   /** Broadcast bound for the in-row scrub ledger, in dup WINDOWS: the
     * flat (32-hex-hash, long) pairs run ~100 B/entry materialized, so
@@ -262,24 +236,6 @@ private[dedup] trait DedupScrub { self: DedupOps.type =>
       dir: String): Boolean =
     scrubLedgerCount(spark, dir) <= scrubLedgerMax
 
-  private[dedup] def scrubLedgerBroadcast(spark: SparkSession,
-      dir: String):
-      org.apache.spark.broadcast.Broadcast[Array[(String, Long)]] = {
-    scrubBc.keySet.removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, dir)
-    val hit = scrubBc.get(k)
-    if (hit != null) hit
-    else {
-      // collect + broadcast OUTSIDE the map lock; a lost race leaks
-      // one redundant broadcast of a bounded ledger, never a wrong one
-      val v = spark.sparkContext.broadcast(
-        scrubLedgerStored(spark, dir).collect()
-          .map(r => (r.getString(0), r.getLong(1))))
-      val prior = scrubBc.putIfAbsent(k, v)
-      if (prior != null) { v.destroy(); prior } else v
-    }
-  }
-
   /** The over-the-broadcast-bound scrub probe — v20b's runtime-filter
     * shape applied to windows: a Bloom of the ledger's window hashes
     * (Catalyst BloomFilterAggregate, ~1.2 GB per 10⁹ windows — always
@@ -300,19 +256,11 @@ private[dedup] trait DedupScrub { self: DedupOps.type =>
     // the sketch depends only on (session, dir): memoized so the
     // streaming fallbacks (st19/st25 over the bound) pay the full-
     // ledger aggregation ONCE, not once per micro-batch (round-10
-    // review finding — the scrubBc convention applied to the bytes)
-    scrubBloomCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val bfKey = (spark, dir)
-    val bfHit = scrubBloomCache.get(bfKey)
-    val bfBytes = (if (bfHit != null) bfHit
-    else {
-      // aggregation job outside the map lock (adaptiveNlist pattern);
-      // deterministic value, so a lost race is harmless
-      val v = Option(BloomSketch.bloomBytes(stored, col("h"),
-        math.max(1L, scrubLedgerCount(spark, dir))))
-      val prior = scrubBloomCache.putIfAbsent(bfKey, v)
-      if (prior != null) prior else v
-    }).orNull
+    // review finding); null for an empty ledger
+    val bfBytes = graft.util.Memo(spark, "scrub_bloom", dir) {
+      BloomSketch.bloomBytes(stored, col("h"),
+        math.max(1L, scrubLedgerCount(spark, dir)))
+    }
     val wins = scrubWindows(df.select(col("doc_id"), col("w")))
     val candidates =
       if (bfBytes == null) wins.filter(lit(false)) // empty ledger

@@ -127,28 +127,20 @@ case class ScrubReport(words: Expression, docId: Expression,
 }
 
 object ScrubReport {
-  private val maps = new java.util.concurrent.ConcurrentHashMap[
-    Long, java.util.HashMap[String, java.lang.Long]]()
+  private val maps =
+    new graft.util.PerBroadcast[java.util.HashMap[String, java.lang.Long]]
 
   /** The flattened ledger map for a broadcast, built once per JVM per
-    * broadcast id (bounded: old ledgers evict wholesale past 8 — a
-    * process touches a handful of (dir, ledger) pairs). */
+    * broadcast id. */
   private[functions] def mapFor(
       bc: Broadcast[Array[(String, Long)]]):
-      java.util.HashMap[String, java.lang.Long] = {
-    // Evict BEFORE computeIfAbsent: ConcurrentHashMap's contract
-    // forbids the mapping function from mutating the map (clear()
-    // inside it can corrupt size accounting or deadlock). Racy
-    // double-clear is harmless — the map is a pure cache.
-    if (maps.size() > 8 && !maps.containsKey(bc.id)) maps.clear()
-    maps.computeIfAbsent(bc.id, _ => {
-      val entries = bc.value
+      java.util.HashMap[String, java.lang.Long] =
+    maps(bc) { entries =>
       val m = new java.util.HashMap[String, java.lang.Long](
         entries.length * 2)
       entries.foreach { case (h, keep) => m.put(h, keep) }
       m
-    })
-  }
+    }
 
   private val digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =

@@ -72,23 +72,18 @@ case class SetHitCount(arr: Expression, bench: Broadcast[Array[String]])
 }
 
 object SetHitCount {
-  private val sets = new java.util.concurrent.ConcurrentHashMap[
-    Long, java.util.HashSet[UTF8String]]()
+  private val sets =
+    new graft.util.PerBroadcast[java.util.HashSet[UTF8String]]
 
   /** The bench set for a broadcast, built once per JVM per broadcast
-    * id (the ScrubReport.mapFor discipline: bounded cache, eviction
-    * BEFORE computeIfAbsent — the mapping function must not mutate the
-    * map). */
+    * id. */
   private[functions] def setFor(
-      bc: Broadcast[Array[String]]): java.util.HashSet[UTF8String] = {
-    if (sets.size() > 8 && !sets.containsKey(bc.id)) sets.clear()
-    sets.computeIfAbsent(bc.id, _ => {
-      val entries = bc.value
+      bc: Broadcast[Array[String]]): java.util.HashSet[UTF8String] =
+    sets(bc) { entries =>
       val s = new java.util.HashSet[UTF8String](entries.length * 2)
       entries.foreach(e => s.add(UTF8String.fromString(e)): Unit)
       s
-    })
-  }
+    }
 
   def set_hit_count(arr: Column,
       bench: Broadcast[Array[String]]): Column =

@@ -291,13 +291,13 @@ object MultimodalOps extends QueryModule {
     * residual filter, pair work quadratic only in DISTINCT signatures. */
   def imagePhashDedup(spark: SparkSession, dir: String,
       maxHamming: Int = 6): DataFrame = {
-    // memoized ([[graft.util.PlanMemo]]): both sides of the pigeonhole
+    // memoized ([[graft.util.Memo.frame]]): both sides of the pigeonhole
     // self-join scan this subtree, and without the memo each scan pays
     // the full PNG-encode + ImageIO-decode pass over the corpus (the
     // dominant cost — measured 2x the whole entry); the signature
     // table is 3 narrow columns, exactly what a production pipeline
     // would store after the codec stage anyway
-    val sigs = graft.util.PlanMemo.memo(spark, "v7d_dhashes", dir)(
+    val sigs = graft.util.Memo.frame(spark, "v7d_dhashes", dir)(
       dhashes(spark, dir).toDF())
     val blocks = (0 until 8).map(k =>
       shiftright(col("dhash"), 8 * k).bitwiseAND(lit(0xFFL)))

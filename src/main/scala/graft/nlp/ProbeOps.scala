@@ -119,14 +119,14 @@ object ProbeOps extends QueryModule {
       .withColumn("pred_en", col("pred_micro") >= 500000L)
 
   /** The fitted coefficient row, memoized per process
-    * ([[graft.util.PlanMemo]] — review finding, round 7): v61, v61b
+    * ([[graft.util.Memo.frame]] — review finding, round 7): v61, v61b
     * and st18 each need the model, and without the memo every entry
     * invocation re-runs the training scan beside its scoring scan.
     * Memoized, the corpus is scanned once to FIT (the stored-model
     * shape: a filter model is trained once, then served), and each
     * entry pays only its scoring scan. */
   private def fitted(spark: SparkSession, dir: String): DataFrame =
-    graft.util.PlanMemo.memo(spark, "v61_probe_coefficients", dir)(
+    graft.util.Memo.frame(spark, "v61_probe_coefficients", dir)(
       coefficients(suffStats(features(spark, dir))))
 
   private def scored(spark: SparkSession, dir: String): DataFrame =

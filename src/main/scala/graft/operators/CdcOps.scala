@@ -297,7 +297,7 @@ object CdcOps extends QueryModule {
     * IS the full recompute over the surviving users, so the hash match
     * proves no trace of the erased users survives in the view. */
   def erasureDowndate(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.util.PlanMemo.memo(spark, "v70_full_agg", dir)(
+    val base = graft.util.Memo.frame(spark, "v70_full_agg", dir)(
       dailyRollup(Tables.events(spark, dir)))
     val erased = dailyRollup(Tables.events(spark, dir)
       .filter(pmod(col("user_id"), lit(EraseModulus)) === 0))

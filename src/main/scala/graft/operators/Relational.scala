@@ -23,10 +23,10 @@ object Relational extends QueryModule {
     * (api/service.go:315-363) re-targeted at testdata. Exact `percentile`
     * for oracle parity; `percentile_approx` is the documented 100 TB path. */
   def endpointLatencies(spark: SparkSession, dir: String): DataFrame =
-    // memoized ([[graft.util.PlanMemo]]): the t04 entry, t04d's witness
+    // memoized ([[graft.util.Memo.frame]]): the t04 entry, t04d's witness
     // baseline and the spec tolerance pins share ONE execution of the
     // exact sort-based percentile plan per process
-    graft.util.PlanMemo.memo(spark, "t04_exact", dir)(
+    graft.util.Memo.frame(spark, "t04_exact", dir)(
       endpointLatenciesPlan(spark, dir))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
 
@@ -98,7 +98,7 @@ object Relational extends QueryModule {
     * RelationalSpec pins it within tolerance of the exact form. */
   def endpointLatenciesApprox(spark: SparkSession, dir: String): DataFrame =
     // memoized: the t04b entry and t04d's dump side share one execution
-    graft.util.PlanMemo.memo(spark, "t04b_approx", dir)(
+    graft.util.Memo.frame(spark, "t04b_approx", dir)(
       endpointLatenciesApproxPlan(spark, dir))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
 
@@ -173,7 +173,7 @@ object Relational extends QueryModule {
   def profile(spark: SparkSession, dir: String): DataFrame =
     // memoized: the v9 entry, v9c's witness baseline and the spec pins
     // share one execution of the Expand-of-scan exact-distinct plan
-    graft.util.PlanMemo.memo(spark, "v9_profile", dir)(
+    graft.util.Memo.frame(spark, "v9_profile", dir)(
       profilePlan(spark, dir))
       .orderBy(col("col_name"))
 
@@ -184,7 +184,7 @@ object Relational extends QueryModule {
     * (HLL++, no Expand, mergeable); rows-only for the driver, sketch
     * error vs the exact profile pinned in ScaleSpec. */
   def profileApprox(spark: SparkSession, dir: String): DataFrame =
-    graft.util.PlanMemo.memo(spark, "v9b_profile_hll", dir)(
+    graft.util.Memo.frame(spark, "v9b_profile_hll", dir)(
       profileApproxPlan(spark, dir))
       .orderBy(col("col_name"))
 
@@ -558,7 +558,7 @@ object Relational extends QueryModule {
   def cardinality(spark: SparkSession, dir: String): DataFrame =
     // memoized: the v10 entry and v10c's witness baseline share one
     // execution of the exact-distinct (Expand x4) aggregate
-    graft.util.PlanMemo.memo(spark, "v10_cardinality", dir)(
+    graft.util.Memo.frame(spark, "v10_cardinality", dir)(
       Tables.lineitem(spark, dir).agg(
         countDistinct(col("l_partkey")).as("n_parts"),
         countDistinct(col("l_suppkey")).as("n_supps"),

@@ -108,21 +108,21 @@ object ClusterOps extends QueryModule {
     * never re-grouped or re-shuffled. Micro-unit sums bound ~9e12
     * points per cluster before Long overflow — beyond that the update
     * switches to DECIMAL sums (the refineCentroids spelling). */
-  /** The shared Lloyd run, memoized ([[graft.util.PlanMemo]]): v47,
+  /** The shared Lloyd run, memoized ([[graft.util.Memo.frame]]): v47,
     * v53, v50b and v18h all consume one training run per process —
     * centroids first (the full iteration chain), then the final
     * assignment derived from the stored centroids. Returns (final
     * assignment (vec_id, xm, cid, d), final centroids (cid, cm)). */
   private def lloyd(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val cents = graft.util.PlanMemo.memo(spark, "v47_cents", dir) {
+    val cents = graft.util.Memo.frame(spark, "v47_cents", dir) {
       val pts = points(spark, dir)
       var c = pts.filter(col("vec_id") < K)
         .select(col("vec_id").as("cid"), col("xm").as("cm"))
       for (_ <- 1 to Iters) c = update(assign(pts, c))
       c
     }
-    val fin = graft.util.PlanMemo.memo(spark, "v47_assign", dir)(
+    val fin = graft.util.Memo.frame(spark, "v47_assign", dir)(
       assign(points(spark, dir), cents))
     (fin, cents)
   }
@@ -352,15 +352,14 @@ object ClusterOps extends QueryModule {
       k: Int): (DataFrame, DataFrame) =
     if (k == K) lloyd(spark, dir)
     else {
-      val cents = graft.util.PlanMemo.memo(spark, s"coarse_cents_k$k", dir) {
-        graft.util.BuildCounters.inc(s"coarse:$dir:k$k")
+      val cents = graft.util.Memo.frame(spark, s"coarse_cents_k$k", dir) {
         val pts = points(spark, dir)
         var c = pts.filter(col("vec_id") < k)
           .select(col("vec_id").as("cid"), col("xm").as("cm"))
         for (_ <- 1 to Iters) c = update(assignAt(pts, c, k))
         c
       }
-      val fin = graft.util.PlanMemo.memo(spark, s"coarse_assign_k$k", dir)(
+      val fin = graft.util.Memo.frame(spark, s"coarse_assign_k$k", dir)(
         assignAt(points(spark, dir), cents, k))
       (fin, cents)
     }

@@ -112,7 +112,7 @@ object PcaOps extends QueryModule {
     * consumer — v68 and v68b both read it). */
   private[graft] def principalRow(spark: SparkSession,
       dir: String): DataFrame =
-    graft.util.PlanMemo.memo(spark, "v68_principal", dir) {
+    graft.util.Memo.frame(spark, "v68_principal", dir) {
       val start = covRow(spark, dir)
         .withColumn("v", transform(sequence(lit(0), lit(D - 1)), i =>
           when(i === 0, 1000000L).otherwise(0L)))

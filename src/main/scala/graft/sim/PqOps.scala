@@ -118,11 +118,11 @@ object PqOps extends QueryModule {
       .localCheckpoint()
 
   /** The trained codebooks (sub, cid, cm) — memoized to parquet per
-    * process ([[graft.util.PlanMemo]]): four registry entries consume
+    * process ([[graft.util.Memo.frame]]): four registry entries consume
     * one training run, which is also the honest layout (codebooks are
     * trained once at ingest and stored). */
   private def codebooks(spark: SparkSession, dir: String): DataFrame =
-    graft.util.PlanMemo.memo(spark, "v18d_pq_codebooks", dir) {
+    graft.util.Memo.frame(spark, "v18d_pq_codebooks", dir) {
       val pts = subPoints(spark, dir).localCheckpoint()
       var cents = pts.filter(col("vec_id") < Ksub)
         .select(col("sub"), col("vec_id").as("cid"), col("xm").as("cm"))
@@ -135,7 +135,7 @@ object PqOps extends QueryModule {
     // resolve the codebook memo BEFORE entering this memo's build (a
     // memo-in-memo call is legal but keeps the lock held longer)
     val cb = codebooks(spark, dir)
-    graft.util.PlanMemo.memo(spark, "v18e_pq_codes", dir)(
+    graft.util.Memo.frame(spark, "v18e_pq_codes", dir)(
       assignSub(subPoints(spark, dir), cb))
   }
 
@@ -373,26 +373,12 @@ object PqOps extends QueryModule {
     * fixture replay the K=8 Lloyd chain untouched; the adaptation —
     * and with it the hierarchical two-level assignment above 256
     * cells — engages only beyond test scale. */
-  def adaptiveCoarseK(spark: SparkSession, dir: String): Int = {
-    // stopped-session sweep + compute-outside-lock: the
-    // SimilarityOps.adaptiveNlist pattern verbatim — a Spark count()
-    // inside computeIfAbsent would block unrelated keys hashed to the
-    // same bin, and an unswept dead-session key pins the session graph
-    coarseKCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val k = (spark, dir)
-    val hit = coarseKCache.get(k)
-    if (hit != null) hit
-    else {
-      val v: Integer = math.min(math.max(ClusterOps.K.toLong,
+  def adaptiveCoarseK(spark: SparkSession, dir: String): Int =
+    graft.util.Memo(spark, "coarseK", dir) {
+      math.min(math.max(ClusterOps.K.toLong,
         Tables.embeddings(spark, dir).count() / 250L),
         Int.MaxValue.toLong).toInt
-      val prior = coarseKCache.putIfAbsent(k, v)
-      (if (prior != null) prior else v): Int
     }
-  }
-
-  private val coarseKCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Integer]()
 
   /** Write the IVF-PQ index INCREMENTALLY: base generation = the 90%
     * `vec_id % 10 != 0` slice, delta = the 10% append encoded with the
@@ -622,9 +608,7 @@ object PqOps extends QueryModule {
     val idx = graft.util.ArtifactCache.persistent("ivfpq_index", "v1", dir)(
       writeIvfPqIndex(spark, dir, _))
     val q = serveQueryFrame(spark, dir, idx, ncell)
-    val outPath = graft.util.TempArtifacts.register(
-      s"${graft.util.TempArtifacts.fastBase}/graft_st21b_" +
-        s"${ProcessHandle.current().pid()}_${System.nanoTime()}")
+    val outPath = graft.util.TempArtifacts.fresh("st21b")
     // seed the result store with the empty frame so a workload with no
     // queries reads back empty exactly like st21's memory sink (review
     // finding, round 8: an all-empty run otherwise had no path to read)

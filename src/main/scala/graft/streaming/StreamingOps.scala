@@ -186,15 +186,9 @@ object StreamingOps extends QueryModule {
   private[graft] def splitCopyPath(spark: SparkSession, dir: String,
       table: String): Option[String] = {
     val f = new java.io.File(s"$dir/$table.parquet")
-    // profiling seam (never set by the driver): SPARK_GRAFT_STSPLIT=0
-    // disables the re-layout, =N overrides the width cap, for
-    // in-binary A/Bs
-    val cap = sys.env.get("SPARK_GRAFT_STSPLIT")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(SplitCap)
     val target =
-      if (!f.isFile || f.length() > MaxSplitCopyBytes || cap == 0) 1
-      else math.min(math.min(cap,
+      if (!f.isFile || f.length() > MaxSplitCopyBytes) 1
+      else math.min(math.min(SplitCap,
         spark.sparkContext.defaultParallelism.toLong),
         math.max(1L, f.length() / SplitUnitBytes)).toInt
     if (target <= 1) None
@@ -293,14 +287,7 @@ object StreamingOps extends QueryModule {
     * matched rows are final once emitted. */
   def runToBatch(spark: SparkSession, agg: DataFrame, name: String,
       mode: String = "complete", shufflePartitions: Int = 2): DataFrame = {
-    // profiling seam (never set by the driver): override every drive's
-    // state-store/shuffle sizing for an A/B without touching call
-    // sites. Round-12 A/B at 8 vs 2 showed no win outside host noise
-    // on the toy batches, so 2 stays the default.
-    val parts = sys.env.get("SPARK_GRAFT_DRIVE_PARTS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(shufflePartitions)
-    withStreamSizedShuffle(spark, parts) {
+    withStreamSizedShuffle(spark, shufflePartitions) {
       val q = agg.writeStream.outputMode(mode)
         .format("memory").queryName(name).start()
       try q.processAllAvailable() finally q.stop()

@@ -26,6 +26,16 @@ object TempArtifacts {
     path
   }
 
+  private val seq = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** A fresh registered path under [[fastBase]]: pid + monotonic-counter
+    * suffixed, so two builds never collide onto one path (no 32-bit
+    * hashCodes) and a rebuild writes a NEW directory instead of
+    * mode(overwrite)-swapping part files under still-planned readers. */
+  def fresh(name: String): String = register(
+    s"$fastBase/graft_${name}_${ProcessHandle.current().pid()}_" +
+      seq.incrementAndGet())
+
   /** Root for the small per-process artifacts above plus the
     * cross-process memo/index stores: tmpfs when the host offers one
     * (round 12 — the GraftSession `spark.local.dir` convention applied

@@ -1,10 +1,10 @@
 package graft
 
-import graft.util.ArtifactCache
+import graft.util.{ArtifactCache, Memo}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shared index-build cache's concurrency contract (the
-  * PlanMemoSpec convention): one build per (kind, dir) under
+/** The shared index-build cache's concurrency contract on the memo
+  * core (the PlanMemoSpec convention): one build per (kind, dir) under
   * concurrent callers, distinct keys never share a path, and the
   * append-contract listing helper sees exactly the parquet parts. */
 class ArtifactCacheSpec extends AnyFunSuite {
@@ -76,7 +76,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
       "published artifact must carry its completeness marker")
     // simulate process death: drop the in-process memo for this kind —
     // the next lookup has only the disk catalog to go on
-    ArtifactCache.resetInProcess(kind)
+    Memo.forget("persistent", kind)
     val cold = call()
     assert(builds.get() === 1, "cold lookup rebuilt despite a catalog hit")
     assert(cold === warm)
@@ -99,7 +99,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
     val first = call()
     // the input grows a byte (and so a new fingerprint)...
     Files.write(input, "gen2x".getBytes("UTF-8"))
-    ArtifactCache.resetInProcess(kind)
+    Memo.forget("persistent", kind)
     val second = call()
     assert(builds.get() === 2)
     assert(second !== first, "changed input must not reuse the artifact")
@@ -107,7 +107,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
     assert(new String(Files.readAllBytes(
       Paths.get(first, "payload.txt")), "UTF-8") === "build1")
     // version bump likewise forces a fresh build at a fresh path
-    ArtifactCache.resetInProcess(kind)
+    Memo.forget("persistent", kind)
     val v2 = ArtifactCache.persistent(kind, "v2", src) { p =>
       builds.incrementAndGet()
       Files.createDirectories(Paths.get(p))

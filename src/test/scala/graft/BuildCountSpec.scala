@@ -6,7 +6,7 @@ import graft.util.BuildCounters
   * landed in the same round that grew DedupOps +903 and RankOps +356
   * lines, so the prime suspect was shared-build behavior — a registry
   * entry paying a REBUILD of an artifact (inverted index, IVF build,
-  * memoized baseline) that ArtifactCache / PlanMemo / ivfBuild were
+  * memoized baseline) that the memo core ([[graft.util.Memo]]) was
   * supposed to absorb. This spec drives the touched entry set twice in
   * one process and pins, via [[graft.util.BuildCounters]] (incremented
   * inside each cache's build critical section):
@@ -29,7 +29,15 @@ class BuildCountSpec extends SparkSpec {
       "v19_bm25_search", "v19b_bm25_stored_index", "v19c_bm25_incremental",
       "v27_rare_bigrams",
       "v18j_ivfpq_incremental",
-      "st17_streaming_decontamination")
+      "st17_streaming_decontamination",
+      // the memos that joined the core later: scrub ledger broadcast /
+      // Bloom / count (v67, st19), vocab pair collect (v4i, v4j), BPE
+      // training (v49, v49b), adaptive nlist (v50c), Spread's
+      // partition probe (v7d)
+      "v67_span_scrub", "st19_streaming_span_scrub",
+      "v4i_encode", "v4j_decode_roundtrip",
+      "v49_bpe_train", "v49b_bpe_fertility",
+      "v50c_semantic_prune_adaptive", "v7d_image_phash_dedup")
     val entries = names.map(n => n -> SparkEntry.queries(n))
 
     val before = BuildCounters.snapshot
@@ -58,8 +66,8 @@ class BuildCountSpec extends SparkSpec {
     assert(BuildCounters.count(s"memo:$key:$sf0001") === 0)
     import spark.implicits._
     def frame = Seq((1L, "a")).toDF("id", "v")
-    graft.util.PlanMemo.memo(spark, key, sf0001)(frame).count()
-    graft.util.PlanMemo.memo(spark, key, sf0001)(frame).count()
+    graft.util.Memo.frame(spark, key, sf0001)(frame).count()
+    graft.util.Memo.frame(spark, key, sf0001)(frame).count()
     assert(BuildCounters.count(s"memo:$key:$sf0001") === 1)
   }
 }

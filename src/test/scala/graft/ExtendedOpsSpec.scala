@@ -149,7 +149,7 @@ class ExtendedOpsSpec extends SparkSpec {
     val got = DedupOps.substringDupsWinnowed(spark, dir, minShared = 1)
       .collect().map(r => (r.getAs[Long]("i"), r.getAs[Long]("j"))).toSet
     assert(got === Set((1L, 2L)))
-    // deterministic: a FRESH plan execution (not the PlanMemo read the
+    // deterministic: a FRESH plan execution (not the Memo.frame read the
     // registered entry returns) selects the identical fingerprints —
     // this also pins memoized == recomputed
     val again = DedupOps

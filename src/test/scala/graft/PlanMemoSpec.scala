@@ -1,12 +1,13 @@
 package graft
 
-import graft.util.PlanMemo
+import graft.util.Memo
 
-/** PlanMemo contract: builds run exactly once per key under
-  * concurrency, nested memo calls (a build that calls memo for a
-  * DIFFERENT key — the codes→codebooks shape) neither deadlock nor
-  * throw ConcurrentHashMap's 'recursive update', and every caller
-  * reads the same materialized rows. */
+/** The frame memo's contract ([[graft.util.Memo.frame]], the
+  * materialize-then-read layer on the memo core): builds run exactly
+  * once per key under concurrency, nested memo calls (a build that
+  * calls memo for a DIFFERENT key — the codes→codebooks shape) neither
+  * deadlock nor throw ConcurrentHashMap's 'recursive update', and
+  * every caller reads the same materialized rows. */
 class PlanMemoSpec extends SparkSpec {
 
   test("concurrent callers build once and all read the same rows") {
@@ -16,7 +17,7 @@ class PlanMemoSpec extends SparkSpec {
       val tasks = (1 to 16).map { _ =>
         pool.submit(new java.util.concurrent.Callable[Long] {
           override def call(): Long =
-            PlanMemo.memo(spark, "pmspec_conc", "k1") {
+            Memo.frame(spark, "pmspec_conc", "k1") {
               built.incrementAndGet()
               spark.range(100).toDF("v")
             }.count()
@@ -38,11 +39,11 @@ class PlanMemoSpec extends SparkSpec {
             // half the threads race the inner key directly while the
             // other half reach it through an outer build lambda
             if (i % 2 == 0)
-              PlanMemo.memo(spark, "pmspec_inner", "k2")(
+              Memo.frame(spark, "pmspec_inner", "k2")(
                 spark.range(7).toDF("v")).count()
             else
-              PlanMemo.memo(spark, "pmspec_outer", "k2") {
-                val inner = PlanMemo.memo(spark, "pmspec_inner", "k2")(
+              Memo.frame(spark, "pmspec_outer", "k2") {
+                val inner = Memo.frame(spark, "pmspec_inner", "k2")(
                   spark.range(7).toDF("v"))
                 inner.selectExpr("v * 2 AS v")
               }.count()
@@ -55,13 +56,13 @@ class PlanMemoSpec extends SparkSpec {
   }
 
   test("distinct dirs memoize separately; same dir re-reads the file") {
-    val a = PlanMemo.memo(spark, "pmspec_dir", "dirA")(
+    val a = Memo.frame(spark, "pmspec_dir", "dirA")(
       spark.range(3).toDF("v"))
-    val b = PlanMemo.memo(spark, "pmspec_dir", "dirB")(
+    val b = Memo.frame(spark, "pmspec_dir", "dirB")(
       spark.range(5).toDF("v"))
     assert(a.count() === 3 && b.count() === 5)
     // a second call must serve the stored result, not rebuild
-    val a2 = PlanMemo.memo(spark, "pmspec_dir", "dirA")(
+    val a2 = Memo.frame(spark, "pmspec_dir", "dirA")(
       sys.error("rebuild attempted"))
     assert(a2.count() === 3)
   }

@@ -31,7 +31,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("grouped aggregation is partial -> final (map-side combine)") {
-    // the PLAN body: the registered t04 entry is a PlanMemo wrapper
+    // the PLAN body: the registered t04 entry is a Memo.frame wrapper
     // whose read side is a parquet scan
     val p = plan(graft.operators.Relational
       .endpointLatenciesPlan(spark, sf0001))
@@ -203,7 +203,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("v22 substring pair join is a keyed join, never nested-loop") {
-    // PLAN bodies (the registered entries are PlanMemo readers)
+    // PLAN bodies (the registered entries are Memo.frame readers)
     import graft.dedup.DedupOps
     Seq("v22" -> DedupOps.substringDupsPlan(spark, sf0001, 5),
         "v22b" -> DedupOps.substringDupsWinnowedPlan(spark, sf0001))

@@ -77,7 +77,7 @@ class ScaleSpec extends SparkSpec {
     }
     // the whole point of the twin: exact countDistinct compiles to an
     // Expand x5 of the scan; the HLL form must not
-    // assert on the PLAN bodies: the registered entries are PlanMemo
+    // assert on the PLAN bodies: the registered entries are Memo.frame
     // wrappers whose read side is a parquet scan either way
     val plan = Relational.profileApproxPlan(spark, sf0001)
       .queryExecution.executedPlan.toString
